@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line with per-query wall times.
@@ -157,8 +158,15 @@ object Bench {
         spark.catalog.clearCache()
         (q.name, if (err.isEmpty) sec else -1.0, err)
       }
+    // classes compiled inside the timed passes: near zero when the
+    // registry's generated classes fit GraftSession.CodegenCacheEntries
+    // after the warmup, about one pass's worth of classes per pass when
+    // the cache evicts them before reuse
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiles0 = compiles.getCount
     val pass1 = timedPass()
     val pass2 = timedPass()
+    val codegenCompiles = compiles.getCount - compiles0
     val results = pass1.zip(pass2).map { case ((n, s1, e1), (_, s2, e2)) =>
       if (e1.nonEmpty || e2.nonEmpty) (n, -1.0, e1.orElse(e2))
       else (n, math.min(s1, s2), None)
@@ -191,7 +199,7 @@ object Bench {
       s""""master":"${esc(spark.sparkContext.master)}",""" +
       s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
     val json =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"errors":$errs,"canary":$canary,"canary_drift":${f3(drift)},"jvm":$jvm,$par,"sf":"$sfDir","epoch_ms":${System.currentTimeMillis()}}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"errors":$errs,"canary":$canary,"canary_drift":${f3(drift)},"jvm":$jvm,$par,"codegen_compiles":$codegenCompiles,"sf":"$sfDir","epoch_ms":${System.currentTimeMillis()}}"""
     println(json)
     // Full artifact on disk too — the stdout line is subject to the
     // driver's capture limits; this file is not. BENCH_FULL.json is

@@ -92,6 +92,22 @@ object det {
     (n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
   }
 
+  /** Natural log quantized to [[D18_6]]: the per-group ln term that an
+    * exact integer-weighted decimal sum then folds (the q129 lesson
+    * above). The oracle side writes `CAST(ln(CAST(c AS DOUBLE)) AS
+    * DECIMAL(18,6))`.
+    */
+  def lnq(c: Column): Column = log(c.cast("double")).cast(D18_6)
+
+  /** Order-independent double average: `n` divides a left fold over the
+    * SORTED collected values, so the IEEE addition order is fixed on
+    * both engines (oracle: `list_reduce(list_sort(list(c) FILTER (c IS
+    * NOT NULL)), (a, b) -> a + b) / n`).
+    * For bounded per-group value lists only — the list is collected.
+    */
+  def foldAvg(c: Column, n: Column): Column =
+    aggregate(sort_array(collect_list(c)), lit(0.0), (a, x) => a + x) / n
+
   /** Cross-engine-EXACT linear-interpolated percentile over a sorted
     * array column (`sort_array(collect_list(x))` on the Spark side,
     * `list_sort(list(x))` in DuckDB) with `n` elements.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{AsOf, Q}
+import graft.functions.det.foldAvg
 
 /** q74: the nineteenth full reference analysis end-to-end — Test
   * Analysis (A/B test of a UI/UX change, /root/reference/SQL/Test
@@ -225,8 +226,6 @@ object AbTest {
           col("avg_session_duration"),
           coalesce(col("feature_usage"), lit(0L)).as("feature_usage"))
 
-      def foldAvg(c: Column, n: Column): Column =
-        aggregate(sort_array(collect_list(c)), lit(0.0), (a, x) => a + x) / n
       def dstd(x: Column): Column = {
         val n = count(lit(1)).cast("double")
         val sx = sum(x.cast(D28_6)).cast("double")

@@ -92,7 +92,16 @@ object Conformal {
         ((col("graft_sy") - col("slope") * col("graft_sx"))
           / col("n_train").cast("double")).as("intercept"))
       .collect()
+    // a NULL slope/intercept is a degenerate train fit: every train x
+    // or y of the segment is NULL, or (ANSI off) all its x are equal.
+    // Re-injected as a literal it would silently null the segment's
+    // residuals — fail loud and name it instead
     val fits: Seq[(String, (Long, Double, Double))] = fitRows.map { r =>
+      if (r.isNullAt(2) || r.isNullAt(3))
+        throw new IllegalArgumentException(
+          s"q210: degenerate train fit for segment '${r.getString(0)}' " +
+            s"(n_train=${r.getLong(1)}): slope/intercept is NULL — its train " +
+            "x or y values are all NULL, or its x values are all equal")
       r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))
     }.toSeq.sortBy(_._1)
 

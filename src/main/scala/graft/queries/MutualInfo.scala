@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.functions.det.lnq
 
 /** q198: MUTUAL INFORMATION between two categorical columns — the
   * dependence readout q11's Pearson corr cannot give for categoricals
@@ -31,8 +32,6 @@ import graft.functions.det
   * The information arithmetic never touches the fact.
   */
 object MutualInfo {
-
-  private def lnq(c: Column): Column = log(c.cast("double")).cast(det.D18_6)
 
   /** One-row MI summary of categorical columns `x` vs `y`. Factored
     * so the spec can pin the independent case (MI = 0), the identical

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{AsOf, Q}
 import graft.Dims.dimBroadcast
+import graft.functions.det.foldAvg
 
 /** q69: the eighteenth full reference analysis end-to-end — Real-time
   * Personalization Effectiveness (/root/reference/SQL/Real-time
@@ -213,8 +214,6 @@ object Personalization {
             .as("user_activity_level")))
 
       val clicked = count(when(col("was_clicked") === 1, 1))
-      def foldAvg(c: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-        aggregate(sort_array(collect_list(c)), lit(0.0), (a, x) => a + x) / n
       val primeN = count(when(col("hour_of_day").between(18, 23), 1))
       val lateN = count(when(col("hour_of_day").between(0, 6), 1))
 

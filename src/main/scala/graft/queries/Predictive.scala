@@ -288,8 +288,6 @@ object Predictive {
 
       val ppScored = graft.CacheScope.trackedCache(pp.filter(col("actual_viewers") > 0))
 
-      def foldAvg(c: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-        aggregate(sort_array(collect_list(c)), lit(0.0), (a, x) => a + x) / n
       val ma = ppScored.groupBy(col("genre"))
         .agg(
           count(lit(1)).cast("long").as("sample_size"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.functions.det.lnq
 
 /** q199: POPULATION STABILITY INDEX — the industry-standard drift
   * alarm for deployed model inputs (credit-scoring canon, public;
@@ -43,7 +44,6 @@ object Psi {
     * (PSI = 0), a hand-computed shift, and the one-sided-bin ledger.
     */
   def psiByKey(df: DataFrame, key: Column, isRef: Column, bin: Column): DataFrame = {
-    def lnq(c: Column): Column = log(c.cast("double")).cast(det.D18_6)
     val cells = df
       .select(key.as("key"), isRef.as("graft_ref"), bin.as("graft_b"))
       .groupBy(col("key"), col("graft_b"))

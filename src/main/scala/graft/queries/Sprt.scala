@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.functions.det.lnq
 
 /** q206: WALD SPRT — the SEQUENTIAL probability ratio test (Wald
   * 1945, public): q74 sizes an A/B readout after the fact and q192/
@@ -32,8 +33,6 @@ import graft.functions.det
   * status×day frame (q138's bound); output one row per status.
   */
 object Sprt {
-
-  private def lnq(c: Column): Column = log(c.cast("double")).cast(det.D18_6)
 
   /** SPRT over a per-(key, day) (n, s) cell frame. p0 = n0/den vs
     * p1 = n1/den with α = β = 0.05. Factored so the spec can pin the

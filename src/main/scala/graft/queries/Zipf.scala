@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.functions.det.lnq
 
 /** q207: ZIPF-LAW FIT per language — the corpus-statistics readout
   * (Zipf 1949, public) behind every token-frequency intuition the
@@ -35,8 +36,6 @@ import graft.functions.det
 object Zipf {
 
   private val K = 50
-
-  private def lnq(c: Column): Column = log(c.cast("double")).cast(det.D18_6)
 
   /** OLS of lnq(freq) on lnq(rank) over the top-`k` rows of a
     * (key, token, freq) frame. Factored so the spec can pin an exact

@@ -99,4 +99,35 @@ class ConformalSpec extends SparkSpec {
     val out = run(rows)("s")
     assert(out._6 >= 0.85, s"coverage ${out._6}")
   }
+
+  // a healthy segment "ok" plus a segment "bad" whose rows `bad`
+  // builds so that its train fit is degenerate
+  private def degenerate(bad: Long => Row): Seq[Row] =
+    (1L to 120L).map(i => Row("ok", i, (i % 7).toDouble, 2.0 * i)) ++
+      (121L to 240L).map(bad)
+
+  private def fitError(rows: Seq[Row]): IllegalArgumentException =
+    intercept[IllegalArgumentException] {
+      Conformal.conformal(
+        spark.createDataFrame(rows.asJava,
+          StructType.fromDDL("seg STRING, id BIGINT, x DOUBLE, y DOUBLE")),
+        col("seg"), col("id"), col("x"), col("y")).collect()
+    }
+
+  test("q210 NULL-slope segment (all train x or all y NULL) fails loud, naming it") {
+    for (bad <- Seq[Long => Row](
+        i => Row("bad", i, null, i.toDouble),
+        i => Row("bad", i, (i % 5).toDouble, null))) {
+      val e = fitError(degenerate(bad))
+      assert(e.getMessage.contains("segment 'bad'"), e.getMessage)
+      assert(!e.getMessage.contains("'ok'"))
+    }
+  }
+
+  test("q210 constant-x segment (ANSI off: NULL slope) fails loud") {
+    val e = withConf("spark.sql.ansi.enabled", "false") {
+      fitError(degenerate(i => Row("bad", i, 3.0, i.toDouble)))
+    }
+    assert(e.getMessage.contains("segment 'bad'"), e.getMessage)
+  }
 }

@@ -21,6 +21,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (see GraftSession) and AQE's explainString would OOM the test JVM
     .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
     .config("spark.ui.enabled", "false")
+    // the engine's codegen cache settings (see GraftSession). The
+    // capacity is a static conf: every suite in the JVM compiles under it
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
+    .config("spark.sql.codegen.useIdInClassName", "false")
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
